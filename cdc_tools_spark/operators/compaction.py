@@ -6,19 +6,15 @@ Reimplements the reference's ``S3Uploader.GetValidChanges``
 UPDATE_BEFORE images entirely (only types {DELETE, INSERT, UPDATE_AFTER} are
 ever admitted — S3Uploader.cs:23,38).
 
-Two physical strategies, same semantics:
-
-* ``"max_by"`` (default) — ``groupBy(key).agg(max_by(payload, (lsn,seqval)))``.
-  Hash aggregation with **map-side partial aggregation**: each input
-  partition pre-compacts its local events per key before the shuffle, so a
-  hot key that dominates the input (FIXTURES.md F6: one repo = 50% of
-  events) shuffles at most one row per key per input partition. This is the
-  scale-correct plan for 10^10 events — no global sort, no single-reducer
-  hot spot, and the shuffle volume is bounded by |keys| × |partitions|, not
-  by |events|.
-* ``"window"`` — ``row_number() OVER (PARTITION BY key ORDER BY lsn DESC,
-  seqval DESC) = 1``. Matches the reference's formulation 1:1; requires all
-  events of a key in one task (skew-sensitive), kept for parity testing.
+One physical plan: ``groupBy(key).agg(max_by(payload, (lsn, seqval)))``.
+Hash aggregation with **map-side partial aggregation**: each input
+partition pre-compacts its local events per key before the shuffle, so a
+hot key that dominates the input (FIXTURES.md F6: one repo = 50% of
+events) shuffles at most one row per key per input partition. This is the
+scale-correct plan for 10^10 events — no global sort, no single-reducer
+hot spot, and the shuffle volume is bounded by |keys| × |partitions|, not
+by |events|. The same core compacts stored rows at read time on
+merge-on-read tables (:func:`last_per_key`).
 """
 
 from __future__ import annotations
@@ -26,16 +22,34 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from cdc_tools_spark.sources.binlog import DELETE, UPDATE_BEFORE
+
+
+def last_per_key(
+    df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[str]
+) -> DataFrame:
+    """≤1 row per key: the row with the greatest ``order_cols`` tuple, as
+    one ``max_by`` hash aggregation. Output columns = input columns (same
+    order)."""
+    payload_cols = [c for c in df.columns if c not in key_cols]
+    ord_expr = F.struct(*[F.col(c) for c in order_cols])
+    agg = df.groupBy(*[F.col(c) for c in key_cols]).agg(
+        F.max_by(F.struct(*[F.col(c) for c in payload_cols]), ord_expr).alias("_last")
+    )
+    return agg.select(
+        *[
+            F.col(f"_last.{c}").alias(c) if c in payload_cols else F.col(c)
+            for c in df.columns
+        ]
+    )
 
 
 def compact_last_write_wins(
     changes: DataFrame,
     key_cols: Sequence[str] = ("repo", "path"),
     order_cols: Sequence[str] = ("lsn", "seqval"),
-    strategy: str = "max_by",
 ) -> DataFrame:
     """≤1 row per key: the payload of the latest ``(lsn, seqval)`` change.
 
@@ -44,71 +58,7 @@ def compact_last_write_wins(
     change (the reference admits only types {1,2,4} into compaction).
     """
     admitted = changes.where(F.col("change_type") != UPDATE_BEFORE)
-    payload_cols = [c for c in changes.columns if c not in key_cols]
-
-    if strategy == "max_by":
-        ord_expr = F.struct(*[F.col(c) for c in order_cols])
-        agg = admitted.groupBy(*key_cols).agg(
-            F.max_by(F.struct(*[F.col(c) for c in payload_cols]), ord_expr).alias("_last")
-        )
-        return agg.select(
-            *[
-                F.col(f"_last.{c}").alias(c) if c in payload_cols else F.col(c)
-                for c in changes.columns
-            ]
-        )
-
-    if strategy == "window":
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        return (
-            admitted.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-            .select(*changes.columns)
-        )
-
-    if strategy == "salted_window":
-        return _salted_window(admitted, key_cols, order_cols, changes.columns)
-
-    raise ValueError(f"unknown compaction strategy: {strategy!r}")
-
-
-def _salted_window(
-    admitted: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    out_cols: Sequence[str],
-    salt_buckets: int = 64,
-) -> DataFrame:
-    """Explicit two-stage salted compaction for pathologically hot keys.
-
-    Stage 1 partitions by ``(key, salt)`` where ``salt = pmod(xxhash64(
-    order_cols), S)`` — a hot key's events spread over S tasks, each keeping
-    its local last change; stage 2 ranks the ≤S survivors per key. Bounds
-    any single task at |key's events| / S while keeping the fully-codegen'd
-    window plan. ``max_by`` achieves the same bound via map-side partial
-    aggregation; this variant exists for workloads where the sort-based
-    window plan wins (low dedup ratios) but a mega-key would overflow one
-    task."""
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets))
-    w1 = Window.partitionBy(*key_cols, "_salt").orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
-    stage1 = (
-        admitted.withColumn("_salt", salt)
-        .withColumn("_rn", F.row_number().over(w1))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_salt")
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
-    return (
-        stage1.withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .select(*out_cols)
-    )
+    return last_per_key(admitted, key_cols, order_cols)
 
 
 def split_upserts_deletes(

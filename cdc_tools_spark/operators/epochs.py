@@ -89,12 +89,17 @@ def _plan_exact(
     """Exact event budgets via a TWO-LEVEL prefix sum (r7, VERDICT r6
     'what's wrong' #2): the former single ``Window.orderBy(lsn)`` put every
     distinct LSN through one task — effectively corpus-sized at scale.
-    Now LSNs hash into ≤ ``n_chunks`` ordered ranges; the within-chunk
-    running sum is a window PARTITIONED by chunk (parallel, bounded by the
-    chunk's distinct LSNs) and only the ≤ ``n_chunks`` chunk totals pass
-    through a single-partition window (bounded by construction, marked by
-    a constant non-foldable partition key). Epoch ids are the same
-    exclusive-cumulative-count ÷ target as before — output identical."""
+    Now LSNs are range-partitioned into ≤ ``n_chunks`` equal-width ranges,
+    ``chunk = floor((lsn − lo) / width)``; the within-chunk running sum is
+    a window PARTITIONED by chunk (parallel, bounded by the chunk's
+    distinct LSNs) and only the ≤ ``n_chunks`` chunk totals pass through a
+    single-partition window (bounded by construction, marked by a constant
+    non-foldable partition key). The prefix sum is exact because ``chunk``
+    is monotone non-decreasing in ``lsn``: every LSN of chunk ``c``
+    precedes every LSN of chunk ``c + 1``, so a chunk's offset plus the
+    running sum inside it is the global exclusive count in LSN order.
+    Epoch ids are the same exclusive-cumulative-count ÷ target as
+    before — output identical."""
     per_lsn = log.groupBy("lsn").agg(F.count(F.lit(1)).alias("cnt"))
     row = per_lsn.agg(F.min("lsn").alias("lo"), F.max("lsn").alias("hi")).first()
     if row["lo"] is None:

@@ -41,11 +41,3 @@ def group_transactions(
         F.sum(F.when(F.col("change_type") == 4, 1).otherwise(0)).alias("n_updates"),
     )
 
-
-def ordered_changes_of_transaction(changes: DataFrame, lsn: int) -> DataFrame:
-    """All changes of one transaction in statement order.
-
-    The reference's per-transaction export ordering
-    (TransactionExporter.cs:117,152: ``OrderBy(LsnInt).ThenBy(SeqValInt)``).
-    """
-    return changes.where(F.col("lsn") == lsn).orderBy("lsn", "seqval")

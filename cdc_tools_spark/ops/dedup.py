@@ -157,24 +157,6 @@ def minhash_signatures_wide(
     return _signatures_from_shingles(sh, num_hashes, id_col)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 32,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, seed, minhash) — narrow form of :func:`minhash_signatures_wide`
-    (same values; the wide form is the compute path)."""
-    wide = minhash_signatures_wide(df, num_hashes, n, text_col, id_col)
-    return wide.select(
-        F.col(id_col),
-        F.posexplode(F.array(*[F.col(f"mh_{s}") for s in range(num_hashes)])).alias(
-            "seed", "minhash"
-        ),
-    )
-
-
 def _band_index_from_signatures(
     sig: DataFrame, num_hashes: int, rows_per_band: int, id_col: str
 ) -> DataFrame:

@@ -245,6 +245,27 @@ def ivf_centroids(
     return [(i, [float(x) for x in r[1]]) for i, r in enumerate(rows)]
 
 
+def _literal_scored_tie(v: Column, centroids) -> Column:
+    """``(cos, neg_id)`` structs of ``v`` against literal ``[(list_id,
+    vector), ...]`` centroids, best first: ``array_sort`` on structs sorts
+    ascending by (cos, neg_id), so reversing gives cos DESC with ties
+    toward the LOWER list id (negated id trick). The one scoring rule of
+    k-means training and IVF assignment serving."""
+    return F.reverse(
+        F.array_sort(
+            F.array(
+                *[
+                    F.struct(
+                        F.round(cosine(v, F.lit([float(x) for x in vec])), 6).alias("cos"),
+                        F.lit(-int(cid)).alias("neg_id"),
+                    )
+                    for cid, vec in centroids
+                ]
+            )
+        )
+    )
+
+
 def ivf_assignments(
     df: DataFrame,
     n_lists: int = 16,
@@ -342,18 +363,7 @@ def ivf_assignments(
                 F.transform(F.col("_top"), lambda s: -s["neg_id"])
             ).alias("probe_rank", "list_id"),
         )
-    # array_sort on structs sorts ascending by (cos, neg_id); reversing gives
-    # cos DESC with ties toward the LOWER list id (negated id trick).
-    scored_tie = F.array(
-        *[
-            F.struct(
-                F.round(cosine(vd, F.lit([float(x) for x in vec])), 6).alias("cos"),
-                F.lit(-int(cid)).alias("neg_id"),
-            )
-            for cid, vec in centroids
-        ]
-    )
-    ranked = F.slice(F.reverse(F.array_sort(scored_tie)), 1, n_probe)
+    ranked = F.slice(_literal_scored_tie(vd, centroids), 1, n_probe)
     return df.select(
         F.col(id_col),
         F.posexplode(F.transform(ranked, lambda s: -s["neg_id"])).alias(
@@ -559,24 +569,12 @@ def kmeans_train(
         # — the vector column is already in scope) and each iteration
         # runs exactly ONE distributed job: the mean aggregation, whose
         # k×dim result is a bounded collect (the same sanctioned scalar
-        # read the BPE argmax uses). Assignment expressions, rounding and
-        # tie rules are byte-identical to ivf_assignments' literal path.
+        # read the BPE argmax uses). Assignment shares ivf_assignments'
+        # literal scoring and tie rule (_literal_scored_tie).
         cent_list = ivf_centroids(df, k, id_col, vec_col)
         for _ in range(max(int(n_iter), 0)):
-            scored_tie = F.array(
-                *[
-                    F.struct(
-                        F.round(
-                            cosine(F.col("_v"), F.lit([float(x) for x in vec])),
-                            6,
-                        ).alias("cos"),
-                        F.lit(-int(cid)).alias("neg_id"),
-                    )
-                    for cid, vec in cent_list
-                ]
-            )
             best = (
-                -F.element_at(F.reverse(F.array_sort(scored_tie)), 1)["neg_id"]
+                -F.element_at(_literal_scored_tie(F.col("_v"), cent_list), 1)["neg_id"]
             ).cast("int")
             means_rows = (
                 # two-step select: a generator (posexplode) in the SAME

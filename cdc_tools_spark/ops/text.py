@@ -41,10 +41,6 @@ def tokens(col: Column | str) -> Column:
     )
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col)).cast("long")
-
-
 def bpe_ish_token_count(col: Column | str) -> Column:
     """Sub-word-ish token count: alpha runs, digit runs, single punctuation."""
     c = F.col(col) if isinstance(col, str) else col
@@ -120,20 +116,6 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _gram_rows(
-    df: DataFrame, n: int, text_col: str, id_col: str
-) -> DataFrame:
-    """NON-distinct token n-gram occurrences: (id, gram) — one row per
-    occurrence, array-native construction (no explode-then-window). The
-    token array is materialized as a column BEFORE the gram lambda —
-    Catalyst does not share subexpressions across lambda bodies, so an
-    inlined tokenizer would re-split the document once per gram (r7)."""
-    base = df.select(F.col(id_col), tokens(text_col).alias("_toks"))
-    return base.select(
-        F.col(id_col), F.explode(_gram_array(F.col("_toks"), n)).alias("gram")
-    )
-
-
 def _gram_array(toks: Column, n: int) -> Column:
     """Token n-gram occurrence array (non-distinct), array-native."""
     return F.when(
@@ -157,8 +139,9 @@ def _run_bounds(S: Column) -> Column:
         n > 0,
         F.filter(
             F.sequence(F.lit(1), n),
-            lambda i: (i == F.lit(1))
-            | (F.element_at(S, i) != F.element_at(S, i - 1)),
+            # F.get is 0-based and null out of bounds: at i = 1 the
+            # predecessor is null and the null-safe compare admits the run
+            lambda i: ~F.element_at(S, i).eqNullSafe(F.get(S, i - 2)),
         ),
     ).otherwise(F.array().cast("array<int>"))
 

@@ -18,8 +18,9 @@ Skew handling is explicit and two-layered:
 * compaction uses ``max_by`` hash aggregation → map-side partial compaction
   bounds a hot key's shuffle volume by the partition count, not event count
   (the salting-equivalent: pre-aggregation happens per input partition);
-* the merge's anti-join runs under AQE with skew-join splitting enabled, and
-  the write repartitions by key-hash bucket (explicit repartition-by-key).
+* the merge is the same ``max_by`` aggregation over current rows ∪ the
+  batch (no join to skew), and the write repartitions by key-hash bucket
+  (explicit repartition-by-key).
 """
 
 from __future__ import annotations
@@ -44,7 +45,6 @@ class ReplayConfig:
     epoch_events: int = 1_000_000
     key_cols: tuple[str, ...] = ("repo", "path")
     num_buckets: int = 64
-    compaction_strategy: str = "max_by"
     epoch_strategy: str = "quantile"
     collect_metrics: bool = True
     total_events: int | None = None  # skip the planner's count pass if known

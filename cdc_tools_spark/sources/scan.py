@@ -22,6 +22,7 @@ below-cores number of local files.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,14 +36,13 @@ MIN_PARALLELIZE_BYTES = 256 << 10
 
 
 def _local_path(uri: str) -> str | None:
-    if uri.startswith("file:"):
-        path = uri[5:]
-        while path.startswith("//"):
-            path = path[1:]
-        return path
-    if uri.startswith("/"):
-        return uri
-    return None
+    """Filesystem path of a local file URI (``file:///x``, ``file:/x`` or a
+    bare ``/x``); None for any other scheme and for ``file://host/...``,
+    whose netloc names a remote host."""
+    u = urlparse(uri)
+    if u.scheme not in ("", "file") or u.netloc:
+        return None
+    return u.path if u.path.startswith("/") else None
 
 
 def _effective_splits(files: list[str]) -> tuple[int, int] | None:

@@ -7,7 +7,7 @@ from cdc_tools_spark.operators.compaction import (
 )
 from cdc_tools_spark.operators.epochs import plan_epochs
 from cdc_tools_spark.operators.transactions import group_transactions
-from cdc_tools_spark.sources.binlog import synthetic_binlog
+from cdc_tools_spark.sources.binlog import UPDATE_BEFORE, synthetic_binlog
 from tests.conftest import EVENT_SCHEMA, person_scenario
 
 
@@ -17,9 +17,9 @@ def person_df(spark):
     return spark.createDataFrame(events, schema=EVENT_SCHEMA)
 
 
-@pytest.mark.parametrize("strategy", ["max_by", "window"])
+@pytest.mark.parametrize("strategy", ["max_by"])
 def test_compaction_last_write_wins(spark, person_df, strategy):
-    out = compact_last_write_wins(person_df, strategy=strategy).collect()
+    out = compact_last_write_wins(person_df).collect()
     by_key = {(r["repo"], r["path"]): r for r in out}
     assert len(out) == len(by_key), "more than one row per key"
     # id 1: deleted at lsn 3, then UPDATE_AFTER at lsn 4 wins
@@ -45,13 +45,21 @@ def test_update_before_never_wins(spark):
     assert len(out) == 1 and out[0]["content"] == "v1"
 
 
-@pytest.mark.parametrize("other", ["window", "salted_window"])
-def test_compaction_strategies_agree(spark, other):
+def test_compaction_matches_python_oracle(spark):
+    """``max_by`` against a plain-Python oracle on a skewed log: the last
+    ``(lsn, seqval)`` change per key wins, UPDATE_BEFORE never does."""
     log = synthetic_binlog(spark, 5_000, n_keys=300, hot_key_pct=40, seed=7)
-    a = compact_last_write_wins(log, strategy="max_by")
-    b = compact_last_write_wins(log, strategy=other)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    want: dict = {}
+    for r in log.collect():
+        if r["change_type"] == UPDATE_BEFORE:
+            continue
+        key = (r["repo"], r["path"])
+        if key not in want or (r["lsn"], r["seqval"]) > (
+            want[key]["lsn"], want[key]["seqval"]
+        ):
+            want[key] = r.asDict()
+    got = {(r["repo"], r["path"]): r.asDict() for r in compact_last_write_wins(log).collect()}
+    assert got == want
 
 
 def test_split_upserts_deletes(spark, person_df):

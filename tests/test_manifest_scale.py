@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 from cdc_tools_spark.lake import fsio
 from cdc_tools_spark.lake.parquet_merge import (
     ParquetMergeTable,
+    _versions_of,
     suggest_num_buckets,
 )
 
@@ -223,6 +224,29 @@ def test_mor_tombstone_stats_combine_and_reset(spark, tmp_path):
     m = t._load()
     assert m.get("bstats", {}) == {}
     assert {r["path"] for r in t.read().collect()} == {"b"}
+
+
+def test_mor_delta_flags_only_buckets_holding_its_tombstones(spark, tmp_path):
+    """A MOR delta adds each bucket's own tombstones to that bucket's
+    stats: one batch writing two buckets, with a delete in only one of
+    them, flags only that bucket for tombstone GC."""
+    t = ParquetMergeTable.create(
+        spark, str(tmp_path / "t"), PAYLOAD, num_buckets=4,
+        order_cols=("lsn", "seqval"), merge_mode="mor",
+    )
+    keys = spark.createDataFrame(
+        [("r", f"p{i}") for i in range(16)], "repo string, path string"
+    )
+    bucket = {
+        r["path"]: r["b"]
+        for r in keys.select("path", t._bucket_expr(4).alias("b")).collect()
+    }
+    deleted = next(p for p, b in bucket.items() if b != bucket["p0"])
+    t.merge(_obatch(spark, 1, [(2, "p0"), (1, deleted)]), 0)
+    m = t._load()
+    written = {b for b, v in m["buckets"].items() if _versions_of(v)}
+    assert written == {str(bucket["p0"]), str(bucket[deleted])}
+    assert m["bstats"] == {str(bucket[deleted]): [1, 1]}
 
 
 def test_v1_full_manifest_upgrades_in_place(spark, tmp_path):

@@ -839,3 +839,20 @@ def test_key_profile_null_key_sorts_last_like_ansi(spark):
     out = key_profile(df, "k", top_k=3).collect()
     assert [r["k"] for r in out] == ["b", None, "a"]
     assert [r["n_rows"] for r in out] == [2, 2, 1]
+
+
+@pytest.mark.parametrize(
+    "uri, want",
+    [
+        ("file://host/share/x.parquet", None),
+        ("file:///tmp/x", "/tmp/x"),
+        ("/tmp/x", "/tmp/x"),
+        ("s3a://b/x", None),
+    ],
+)
+def test_local_path_keeps_hosts_remote(uri, want):
+    """The scan guard reads footers only of files on this machine: a
+    ``file://`` URI naming a host is remote, not a local path."""
+    from cdc_tools_spark.sources.scan import _local_path
+
+    assert _local_path(uri) == want
