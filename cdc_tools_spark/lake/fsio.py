@@ -191,6 +191,14 @@ def mtime(path: str) -> float:
     return fs.getFileStatus(p).getModificationTime() / 1000.0
 
 
+def size(path: str) -> int:
+    """Length of a file in bytes."""
+    if _is_local(path):
+        return os.path.getsize(path)
+    _, fs, p = _fs(path)
+    return fs.getFileStatus(p).getLen()
+
+
 def newest_mtime(path: str, max_entries: int = 4096) -> float:
     """Newest modification time (epoch seconds) among the path itself and
     the FILES under it (bounded recursive listing, at most ``max_entries``

@@ -33,7 +33,8 @@ Design is a miniature Iceberg:
   running inside a Redshift transaction (RedshiftDao.cs:91-115).
 * **MERGE** — one ``max_by`` aggregation per key over the touched
   buckets' current rows ∪ the batch's events: batch compaction and merge
-  dedup are the same hash aggregation, with no join. Equivalent to the
+  dedup are the same sort-based aggregation with map-side partial
+  compaction, with no join. Equivalent to the
   reference's staged delete-then-insert transaction
   (RedshiftDao.cs:91-115) and to Iceberg ``MERGE INTO``; idempotent, so a
   crash between data write and manifest swap (or between manifest swap and
@@ -50,13 +51,16 @@ already multi-writer correct.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 from cdc_tools_spark.lake import fsio
@@ -189,16 +193,96 @@ def _parse_dir_version(name: str) -> int | None:
         return None
 
 
-def _align(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project ``df`` onto ``schema``: cast present columns, null the rest."""
-    cols = []
-    have = set(df.columns)
-    for f in schema.fields:
+class _MergeExprs(NamedTuple):
+    """The Column templates of one merge shape (:func:`_merge_exprs`)."""
+
+    work_cols: tuple[str, ...]  # order columns a plain table does not store
+    batch: tuple[Column, ...]  # batch rows → table schema + work columns, _src=1
+    current: tuple[Column, ...]  # stored rows → the same columns, _src=0 (COW)
+    observe_in: tuple[Column, ...]  # raw count and the batch's lsn bounds
+    observe_winners: tuple[Column, ...]  # applied deletes, from-batch, max lsn
+    upserts: Column  # winners that are not deletes
+
+
+@functools.lru_cache(maxsize=64)
+def _merge_exprs(
+    sc: SparkContext,
+    stored_json: str,
+    table_json: str,
+    batch_cols: tuple[str, ...],
+    persist_order: bool,
+) -> _MergeExprs:
+    """A merge's expressions, built once per (stored schema, evolved table
+    schema, batch columns, ordered-ness) and context. Building them costs
+    a few hundred py4j round trips; reusing them costs none, and Spark
+    gives every plan that uses a ``Column`` fresh expression ids. ``sc`` keys the
+    cache to the context whose JVM holds the Columns."""
+    schema = T.StructType.fromJson(json.loads(table_json))
+    stored = set(T.StructType.fromJson(json.loads(stored_json)).fieldNames())
+    work_cols = tuple(c for c in ("lsn", "seqval") if c not in schema.fieldNames())
+    is_delete = F.col("change_type") == DELETE
+
+    def cast_or_null(f: T.StructField, have: set[str]) -> Column:
         if f.name in have:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+            return F.col(f.name).cast(f.dataType).alias(f.name)
+        return F.lit(None).cast(f.dataType).alias(f.name)
+
+    # the batch projected onto the table schema, plus the merge's work
+    # columns; _src=1 tags batch rows (0 = current rows)
+    have = set(batch_cols)
+    batch = (
+        *[
+            is_delete.alias(f.name)
+            if f.name == "_tombstone" and f.name not in have
+            else cast_or_null(f, have)
+            for f in schema.fields
+        ],
+        *[F.col(c).cast("long").alias(c) for c in work_cols],
+        F.col("change_type").cast("int").alias("change_type"),
+        F.lit(1).alias("_src"),
+    )
+    # stored rows cast onto the (possibly evolved) table schema, columns
+    # missing from old files nulled, in the same column order as the batch
+    if persist_order:
+        order = (
+            F.when(F.col("_tombstone"), F.lit(DELETE)).otherwise(F.lit(2))
+            .alias("change_type"),
+        )
+    else:
+        # Current rows sort below every event of the batch: any event for
+        # the key wins; absent events, the row survives.
+        order = (
+            F.lit(-1).cast("long").alias("lsn"),
+            F.lit(-1).cast("long").alias("seqval"),
+            F.lit(2).alias("change_type"),
+        )
+    current = (
+        *[cast_or_null(f, stored) for f in schema.fields], *order, F.lit(0).alias("_src"),
+    )
+    from_batch = F.when(F.col("_src") == 1, F.col("lsn"))
+    return _MergeExprs(
+        work_cols=work_cols,
+        batch=batch,
+        current=current,
+        observe_in=(
+            F.sum("_src").alias("raw"),
+            F.min(from_batch).alias("lo"),
+            F.max(from_batch).alias("hi"),
+        ),
+        observe_winners=(
+            F.sum(F.when(is_delete & (F.col("_src") == 1), 1).otherwise(0)).alias("dels"),
+            F.sum(F.col("_src")).alias("from_batch"),
+            F.max("lsn").alias("hi"),
+        ),
+        upserts=F.col("change_type") != DELETE,
+    )
+
+
+@functools.lru_cache(maxsize=64)
+def _bucket_col(sc: SparkContext, key_cols: tuple[str, ...], num_buckets: int) -> Column:
+    """``pmod(xxhash64(keys), num_buckets)`` as an int, built once per
+    context (``sc`` keys the cache)."""
+    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
 
 
 def suggest_num_buckets(
@@ -836,10 +920,8 @@ class ParquetMergeTable(LakeTable):
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self._load()["schema"]))
 
-    def _bucket_expr(self, num_buckets: int):
-        return F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(num_buckets)).cast(
-            "int"
-        )
+    def _bucket_expr(self, num_buckets: int) -> Column:
+        return _bucket_col(self.spark.sparkContext, self.key_cols, int(num_buckets))
 
     def _leaf_dirs(self, manifest: dict, buckets: Sequence[int] | None = None) -> list[str]:
         assigned = manifest["buckets"]
@@ -927,7 +1009,8 @@ class ParquetMergeTable(LakeTable):
         (written for exactly this probe) skip non-matching row groups, so
         a lookup costs a handful of row groups, never a bucket scan. MOR
         tables compact only the target key's rows (the filter precedes the
-        compaction aggregate). Returns 0 rows for absent or deleted keys."""
+        compaction aggregate), in one partition, so every lookup is one
+        Spark job. Returns 0 rows for absent or deleted keys."""
         if len(key_values) != len(self.key_cols):
             raise ValueError(
                 f"lookup takes {len(self.key_cols)} key values "
@@ -968,7 +1051,9 @@ class ParquetMergeTable(LakeTable):
             cond = e if cond is None else cond & e
         df = df.where(cond)
         if m.get("merge_mode") == "mor":
-            df = last_per_key(df, self.key_cols, m["order_cols"])
+            # the key's few rows in one partition: the compaction aggregate
+            # needs no exchange, so the lookup is one Spark job, not two
+            df = last_per_key(df.coalesce(1), self.key_cols, m["order_cols"])
         if m.get("order_cols"):
             df = df.where(~F.col("_tombstone")).drop("_tombstone")
         return df
@@ -1325,8 +1410,9 @@ class ParquetMergeTable(LakeTable):
         ``current_rows ∪ batch_events``, where current rows carry their
         stored order tuple (ordered tables) or ``(-1, -1)`` (plain tables,
         "before everything in this epoch"). One shuffle, no join, no
-        caching; batch compaction and merge dedup happen in the same hash
-        aggregation (map-side partial agg bounds hot-key shuffle volume).
+        caching; batch compaction and merge dedup happen in the same
+        sort-based aggregation with map-side partial compaction (the
+        partial ``max_by`` below the shuffle bounds hot-key shuffle volume).
         MOR tables run the same aggregation over the batch alone and append
         its winners as a delta per bucket they land in: never reading
         current rows, the write costs O(batch) regardless of table size
@@ -1360,25 +1446,11 @@ class ParquetMergeTable(LakeTable):
         ]
         new_schema, _ = evolve_schema(current_schema, T.StructType(payload_fields))
 
-        # the batch projected onto the table schema, plus the merge's work
-        # columns; _src=1 tags batch rows (0 = current rows)
-        work_cols = [c for c in ("lsn", "seqval") if c not in new_schema.fieldNames()]
-        have = set(batch.columns)
-        upd_t = batch.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in have
-                else (
-                    (F.col("change_type") == DELETE).alias(f.name)
-                    if f.name == "_tombstone"
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                )
-                for f in new_schema.fields
-            ],
-            *[F.col(c).cast("long").alias(c) for c in work_cols],
-            F.col("change_type").cast("int").alias("change_type"),
-            F.lit(1).alias("_src"),
+        exprs = _merge_exprs(
+            self.spark.sparkContext, m["schema"], new_schema.json(),
+            tuple(batch.columns), persist_order,
         )
+        upd_t = batch.select(*exprs.batch)
         if mor:
             touched, combined = None, upd_t  # touched = the buckets written
         else:
@@ -1405,25 +1477,9 @@ class ParquetMergeTable(LakeTable):
             # this merge was doing anyway (incremental rescale makes
             # progress for free)
             touched = self._expand_to_split_groups(m, touched)
-            current = _align(
-                self._read_dirs(self._leaf_dirs(m, touched), current_schema),
-                new_schema,
-            )
-            if persist_order:
-                cur_type = F.when(F.col("_tombstone"), F.lit(DELETE)).otherwise(F.lit(2))
-                cur_t = current.select(
-                    "*", cur_type.alias("change_type"), F.lit(0).alias("_src")
-                )
-            else:
-                # Current rows sort below every event of the batch: any
-                # event for the key wins; absent events, the row survives.
-                cur_t = current.select(
-                    "*",
-                    F.lit(-1).cast("long").alias("lsn"),
-                    F.lit(-1).cast("long").alias("seqval"),
-                    F.lit(2).alias("change_type"),
-                    F.lit(0).alias("_src"),
-                )
+            cur_t = self._read_dirs(
+                self._leaf_dirs(m, touched), current_schema
+            ).select(*exprs.current)
             combined = cur_t.unionByName(upd_t)
         # Raw-batch count AND the batch's [min, max] lsn ride the write job
         # (filtered to _src=1, the batch rows before compaction) — no
@@ -1432,15 +1488,9 @@ class ParquetMergeTable(LakeTable):
         # #2). Observed above the union: under the batch branch of the
         # union the metrics never arrived in a streaming micro-batch, and
         # Observation.get blocked forever.
-        from_batch = F.when(F.col("_src") == 1, F.col("lsn"))
-        in_exprs = [
-            F.sum("_src").alias("raw"),
-            F.min(from_batch).alias("lo"),
-            F.max(from_batch).alias("hi"),
-        ]
         obs_in = Observation(f"merge-in-{epoch_id}-{m['version']}")
         if collect_metrics:
-            combined = combined.observe(obs_in, *in_exprs)
+            combined = combined.observe(obs_in, *exprs.observe_in)
 
         # _src breaks (lsn, seqval) ties toward the batch (identical payload
         # on idempotent replays — determinism, not semantics) and tags the
@@ -1448,21 +1498,13 @@ class ParquetMergeTable(LakeTable):
         winners = compact_last_write_wins(
             combined, self.key_cols, (*order_cols, "_src")
         )
-        win_exprs = [
-            F.sum(
-                F.when((F.col("change_type") == DELETE) & (F.col("_src") == 1), 1)
-                .otherwise(0)
-            ).alias("dels"),
-            F.sum(F.col("_src")).alias("from_batch"),
-            F.max("lsn").alias("hi"),
-        ]
         obs = Observation(f"merge-{epoch_id}-{m['version']}")
-        winners = winners.observe(obs, *win_exprs)
+        winners = winners.observe(obs, *exprs.observe_winners)
         if persist_order:
             merged = winners.drop("change_type", "_src")  # tombstones persist
         else:
-            merged = winners.where(F.col("change_type") != DELETE).drop(
-                "change_type", "_src", *work_cols
+            merged = winners.where(exprs.upserts).drop(
+                "change_type", "_src", *exprs.work_cols
             )
 
         version, stats = self._write_version(m, merged, counts=collect_metrics)
@@ -1470,7 +1512,7 @@ class ParquetMergeTable(LakeTable):
             if not stats:
                 return MergeResult(epoch_id, 0, 0, 0, m["version"], {}, 0)
             touched = sorted(stats)
-        w = _obs_get(obs, winners, win_exprs)
+        w = _obs_get(obs, winners, exprs.observe_winners)
         n_deletes = int(w["dels"] or 0)
         # upserts applied = winners that came from this batch and are not
         # deletes (current rows that survived are not "applied" events)
@@ -1480,7 +1522,7 @@ class ParquetMergeTable(LakeTable):
         raw_events = batch_lo = batch_hi = -1
         lineage: dict[int, int] = {}
         if collect_metrics:
-            i = _obs_get(obs_in, combined, in_exprs)
+            i = _obs_get(obs_in, combined, exprs.observe_in)
             raw_events = int(i["raw"] or 0)
             batch_lo = -1 if i["lo"] is None else int(i["lo"])
             batch_hi = -1 if i["hi"] is None else int(i["hi"])

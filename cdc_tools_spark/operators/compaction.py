@@ -7,43 +7,66 @@ UPDATE_BEFORE images entirely (only types {DELETE, INSERT, UPDATE_AFTER} are
 ever admitted — S3Uploader.cs:23,38).
 
 One physical plan: ``groupBy(key).agg(max_by(payload, (lsn, seqval)))``.
-Hash aggregation with **map-side partial aggregation**: each input
-partition pre-compacts its local events per key before the shuffle, so a
-hot key that dominates the input (FIXTURES.md F6: one repo = 50% of
-events) shuffles at most one row per key per input partition. This is the
-scale-correct plan for 10^10 events — no global sort, no single-reducer
-hot spot, and the shuffle volume is bounded by |keys| × |partitions|, not
-by |events|. The same core compacts stored rows at read time on
-merge-on-read tables (:func:`last_per_key`).
+Sort-based aggregation with **map-side partial compaction**: ``max_by``
+over a struct buffer cannot use hash aggregation, so Spark plans a partial
+and a final ``SortAggregate``, and the partial one runs below the shuffle.
+Each input partition pre-compacts its local events per key before the
+shuffle, so a hot key that dominates the input (FIXTURES.md F6: one repo =
+50% of events) shuffles at most one row per key per input partition. This
+is the scale-correct plan for 10^10 events — no global sort, no
+single-reducer hot spot, and the shuffle volume is bounded by |keys| ×
+|partitions|, not by |events|. The same core compacts stored rows at read
+time on merge-on-read tables (:func:`last_per_key`).
+
+The aggregate and its unpacking select are built once per SparkContext,
+column list, key and order (:func:`_last_per_key_exprs`): building a
+``Column`` costs py4j round trips, and Spark gives a reused ``Column``
+fresh expression ids in every plan that uses it.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 
 from cdc_tools_spark.sources.binlog import DELETE, UPDATE_BEFORE
+
+
+@functools.lru_cache(maxsize=64)
+def _last_per_key_exprs(
+    sc: SparkContext,
+    columns: tuple[str, ...],
+    key_cols: tuple[str, ...],
+    order_cols: tuple[str, ...],
+) -> tuple[tuple[Column, ...], Column, tuple[Column, ...]]:
+    """(grouping columns, ``max_by`` aggregate, unpacking select) of
+    :func:`last_per_key`. ``sc`` keys the cache to the context whose JVM
+    holds the Columns."""
+    payload_cols = [c for c in columns if c not in key_cols]
+    ord_expr = F.struct(*[F.col(c) for c in order_cols])
+    last = F.max_by(F.struct(*[F.col(c) for c in payload_cols]), ord_expr).alias("_last")
+    unpack = tuple(
+        F.col(f"_last.{c}").alias(c) if c in payload_cols else F.col(c)
+        for c in columns
+    )
+    return tuple(F.col(c) for c in key_cols), last, unpack
 
 
 def last_per_key(
     df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[str]
 ) -> DataFrame:
     """≤1 row per key: the row with the greatest ``order_cols`` tuple, as
-    one ``max_by`` hash aggregation. Output columns = input columns (same
+    one ``max_by`` sort aggregation. Output columns = input columns (same
     order)."""
-    payload_cols = [c for c in df.columns if c not in key_cols]
-    ord_expr = F.struct(*[F.col(c) for c in order_cols])
-    agg = df.groupBy(*[F.col(c) for c in key_cols]).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload_cols]), ord_expr).alias("_last")
+    keys, last, unpack = _last_per_key_exprs(
+        df.sparkSession.sparkContext, tuple(df.columns), tuple(key_cols),
+        tuple(order_cols),
     )
-    return agg.select(
-        *[
-            F.col(f"_last.{c}").alias(c) if c in payload_cols else F.col(c)
-            for c in df.columns
-        ]
-    )
+    return df.groupBy(*keys).agg(last).select(*unpack)
 
 
 def compact_last_write_wins(

@@ -15,9 +15,10 @@ final table state — the reference's store-offset-after-upload argument
 (RedshiftWriter.cs:46-49), strengthened to true exactly-once.
 
 Skew handling is explicit and two-layered:
-* compaction uses ``max_by`` hash aggregation → map-side partial compaction
-  bounds a hot key's shuffle volume by the partition count, not event count
-  (the salting-equivalent: pre-aggregation happens per input partition);
+* compaction uses ``max_by`` sort-based aggregation with map-side partial
+  compaction → a hot key's shuffle volume is bounded by the partition
+  count, not event count (the salting-equivalent: the partial aggregate
+  runs per input partition, below the shuffle);
 * the merge is the same ``max_by`` aggregation over current rows ∪ the
   batch (no join to skew), and the write repartitions by key-hash bucket
   (explicit repartition-by-key).
@@ -196,7 +197,7 @@ def replay(
             summary.epochs_skipped += 1
             continue
         # merge() compacts internally (batch compaction and merge dedup are
-        # one hash aggregation — see ParquetMergeTable.merge); handing it
+        # one aggregation — see ParquetMergeTable.merge); handing it
         # the raw epoch slice avoids a second pass over the events.
         batch = provider(epoch)
         if config.parity_column and "content" in batch.columns:

@@ -302,7 +302,10 @@ def q_cdc_upsert_delete_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5: transaction regrouping — one row per commit LSN."""
-    out = group_transactions(changelog_from_events(spark, sf_dir))
+    # the first operator is an aggregation, whose partial half runs in the
+    # scan stage: the unsplittable-input repartition would only add a
+    # shuffle in front of it
+    out = group_transactions(changelog_from_events(spark, sf_dir, parallel=False))
     return out.select(
         "lsn",
         F.col("n_changes").cast("long").alias("n_changes"),
@@ -316,7 +319,8 @@ def q_cdc_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_watermarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3/S4: min/max LSN high/low-water marks + event count."""
-    return changelog_from_events(spark, sf_dir).agg(
+    # a global aggregate straight off the scan: no repartition (as above)
+    return changelog_from_events(spark, sf_dir, parallel=False).agg(
         F.min("lsn").alias("min_lsn"),
         F.max("lsn").alias("max_lsn"),
         F.count(F.lit(1)).alias("n_events"),

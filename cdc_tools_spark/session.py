@@ -49,6 +49,11 @@ def get_spark(
         # instead of launching a distributed listing job per epoch.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
         .config("spark.ui.enabled", "false")
+        # PySpark's per-call call-site capture (for error messages) walks
+        # the Python stack and makes ~4 extra py4j round trips for every
+        # Column and DataFrame call: ~60% of a merge plan's driver-side
+        # construction. Off by default; ``extra_conf`` can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
     active = SparkSession.getActiveSession()

@@ -16,7 +16,8 @@ many files and row groups per file, so ``n_files >= cores`` (or
 ``row_groups >= cores``) short-circuits and the read is returned
 unchanged — no shuffle is ever added at 100 TB. Inspecting row-group
 counts costs one footer read per file and is only attempted for a
-below-cores number of local files.
+below-cores number of local files; on other storage the same byte floor
+applies, from one file status per file.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ import os
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cdc_tools_spark.lake import fsio
 
 # Inputs smaller than this are not worth an extra exchange: the whole table
 # is a couple of scan tasks' worth of bytes and typically feeds a broadcast.
@@ -77,8 +80,11 @@ def parallel_read(spark: SparkSession, path: str) -> DataFrame:
         return df
     info = _effective_splits(list(files))
     if info is None:
-        # non-local storage: trust the planner's byte-range splits
-        if df.rdd.getNumPartitions() >= target:
+        # non-local storage: the same byte floor, from one Hadoop FS status
+        # per file (fewer than cores of them), then the planner's
+        # byte-range splits
+        nbytes = sum(fsio.size(f) for f in files)
+        if nbytes < MIN_PARALLELIZE_BYTES or df.rdd.getNumPartitions() >= target:
             return df
         return df.repartition(target)
     groups, nbytes = info

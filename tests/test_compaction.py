@@ -206,3 +206,21 @@ def test_keyset_page_plans_as_take_ordered(spark, tmp_path):
     plan = page._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan  # no global sort
+
+
+def test_compaction_compacts_map_side_below_the_shuffle(spark, tmp_path):
+    """The skew argument's plan: ``max_by`` over a struct plans as sort
+    aggregation, and its partial half (``partial_max_by``) runs below the
+    key exchange, so each input partition ships at most one row per key."""
+    p = str(tmp_path / "log")
+    synthetic_binlog(spark, 2_000, n_keys=50, hot_key_pct=40, seed=3).write.parquet(p)
+    plan = compact_last_write_wins(spark.read.parquet(p))._jdf.queryExecution()
+    lines = plan.executedPlan().toString().splitlines()
+
+    def first(token):
+        return next(i for i, line in enumerate(lines) if token in line)
+
+    exchange = first("Exchange hashpartitioning(repo")
+    assert first("partial_max_by") > exchange  # printed below = runs before
+    assert "SortAggregate" in lines[first("partial_max_by")]
+    assert not any("HashAggregate" in line for line in lines)

@@ -1,4 +1,5 @@
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import types as T
 
 from cdc_tools_spark.lake.iceberg import IcebergTable
@@ -299,6 +300,67 @@ def test_cow_metrics_add_no_spark_jobs(spark, tmp_path):
     assert jobs_on == jobs_off
 
 
+# py4j round trips a warm merge may spend building its plan, up to the
+# write action. Capture on and no cached expressions: ~1,300-1,600; the
+# cached build with capture off measures ~100-170.
+MERGE_PLAN_ROUND_TRIPS = 250
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_warm_merge_plan_builds_from_cached_expressions(spark, tmp_path, monkeypatch, mode):
+    """Driver cost of a merge plan, counted in py4j round trips (a count,
+    so it does not depend on host speed): a new table over an already
+    merged schema builds from the cached expressions, and its second merge
+    plan, built up to the write action, stays within the budget."""
+    import gc
+
+    import py4j.clientserver
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cdc_tools_spark.lake import parquet_merge
+    from cdc_tools_spark.operators import compaction
+
+    kw = {"order_cols": ("lsn", "seqval"), "merge_mode": "mor"} if mode == "mor" else {}
+    batches = [
+        _file_batch(spark, tmp_path, [_row(e, 2, "r", f"p{i}", f"v{e}") for i in range(20)], f"b{e}")
+        for e in range(2)
+    ]
+    first = ParquetMergeTable.create(spark, str(tmp_path / "first"), PAYLOAD, num_buckets=8, **kw)
+    for e, b in enumerate(batches):
+        first.merge(b, e)
+
+    caches = (parquet_merge._merge_exprs, compaction._last_per_key_exprs)
+    misses = [c.cache_info().misses for c in caches]
+    table = ParquetMergeTable.create(spark, str(tmp_path / "t"), PAYLOAD, num_buckets=8, **kw)
+    table.merge(batches[0], 0)
+    assert [c.cache_info().misses for c in caches] == misses
+
+    class WriteReached(Exception):
+        pass
+
+    def stop_at_write(self, *args, **kwargs):
+        raise WriteReached
+
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", stop_at_write)
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting_send)
+    gc.collect()
+    gc.disable()  # object releases otherwise land at the collector's whim
+    try:
+        with pytest.raises(WriteReached):
+            table.merge(batches[1], 1)
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+    assert len(sent) <= MERGE_PLAN_ROUND_TRIPS, len(sent)
+
+
 def test_cluster_by_sorts_files_and_preserves_semantics(spark, tmp_path):
     """Clustered writes: cluster_by=("lsn",) physically sorts each bucket's
     files so row-group min/max statistics prune lsn-bounded scans; results
@@ -424,6 +486,23 @@ def test_lookup_runs_exactly_one_spark_job(spark, tmp_path):
     rows = table.lookup("r", "p7").collect()
     jobs = len(set(st.getJobIdsForGroup()) - before)
     assert [(r["path"], r["content"]) for r in rows] == [("p7", "c7")]
+    assert jobs == 1
+
+
+def test_mor_lookup_runs_exactly_one_spark_job(spark, tmp_path):
+    """A MOR lookup compacts the key's rows in one partition: the
+    compaction aggregate needs no exchange, so the lookup is one job."""
+    table = ParquetMergeTable.create(
+        spark, str(tmp_path / "t"), PAYLOAD, num_buckets=8,
+        order_cols=("lsn", "seqval"), merge_mode="mor",
+    )
+    table.merge(_batch(spark, [_row(1, 2, "r", f"p{i}", f"c{i}") for i in range(50)]), 0)
+    table.merge(_batch(spark, [_row(2, 2, "r", "p7", "new")]), 1)
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup())
+    rows = table.lookup("r", "p7").collect()
+    jobs = len(set(st.getJobIdsForGroup()) - before)
+    assert [(r["path"], r["content"]) for r in rows] == [("p7", "new")]
     assert jobs == 1
 
 

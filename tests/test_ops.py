@@ -856,3 +856,50 @@ def test_local_path_keeps_hosts_remote(uri, want):
     from cdc_tools_spark.sources.scan import _local_path
 
     assert _local_path(uri) == want
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_scan_guard_skips_tiny_remote_tables(spark, tmp_path, monkeypatch):
+    """Non-local storage gets the same byte floor as local files: a tiny
+    single-file table is read plain, without a round-robin exchange."""
+    from cdc_tools_spark.sources import scan
+
+    p = str(tmp_path / "tiny")
+    spark.range(100).coalesce(1).write.parquet(p)
+    monkeypatch.setattr(scan, "_local_path", lambda uri: None)
+    assert "RoundRobinPartitioning" not in _plan(scan.parallel_read(spark, p))
+
+
+def test_cdc_aggregate_queries_read_events_plain(spark, tmp_path):
+    """cdc_transactions and cdc_watermarks aggregate straight off the scan:
+    even when the scan guard would repartition the events (one file, one
+    row group, above its byte floor), their plans add no round-robin
+    exchange in front of the partial aggregate."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdc_tools_spark import queries as Q
+    from cdc_tools_spark.sources.scan import MIN_PARALLELIZE_BYTES, parallel_read
+
+    n = 20_000
+    events = pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "event_type": pa.array(["click", "view", "error", "purchase"] * (n // 4)),
+        "user_id": pa.array([i % 97 for i in range(n)], pa.int64()),
+        "noise": pa.array([os.urandom(16) for _ in range(n)], pa.binary()),
+    })
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = str(sf / "events.parquet")
+    pq.write_table(events, path, row_group_size=n)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    assert os.path.getsize(path) >= MIN_PARALLELIZE_BYTES
+    # the guard does fire on this file
+    assert "RoundRobinPartitioning" in _plan(parallel_read(spark, path))
+    for q in (Q.q_cdc_transactions, Q.q_cdc_watermarks):
+        assert "RoundRobinPartitioning" not in _plan(q(spark, str(sf))), q.__name__
