@@ -4,7 +4,9 @@ The Spark-native form of the reference's consumer/writer thread pair
 (KeyedJsonConsumer.cs:88-144 + RedshiftWriter.cs:28-63): ``readStream`` over
 the append-only binlog directory (the sandbox stand-in for the Kafka source
 S9 — swap for ``format("kafka")`` + ``from_json``/``from_avro`` on a real
-bus), then ``foreachBatch``: compact → newer-wins MERGE → commit marker.
+bus), then ``foreachBatch``: compact → newer-wins MERGE → commit marker →
+MOR governor, the one apply step every ingest driver shares
+(``pipeline._apply_epoch``).
 
 The hand-rolled windowing (WindowMs OR WindowItems, RedshiftWriter.cs:52-61)
 becomes the trigger + ``maxFilesPerTrigger``; the bounded-buffer backpressure
@@ -21,32 +23,31 @@ crash) re-merges harmlessly, same argument as the batch pipeline.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from cdc_tools_spark.lake.parquet_merge import META_COLS, ParquetMergeTable
-
+from cdc_tools_spark.lake.parquet_merge import META_COLS
+from cdc_tools_spark.pipeline import _MICRO_BATCH, TableLayout, _apply_epoch, _open_table
 from cdc_tools_spark.sources.binlog import BINLOG_SCHEMA
-from cdc_tools_spark.state.commit_log import CommitLog, EpochCommit
+from cdc_tools_spark.state.commit_log import CommitLog
+
+_PAYLOAD = T.StructType([f for f in BINLOG_SCHEMA.fields if f.name not in META_COLS])
 
 
 @dataclass
-class StreamConfig:
-    key_cols: tuple[str, ...] = ("repo", "path")
-    num_buckets: int = 64
+class StreamConfig(TableLayout):
+    """Layout fields (see :class:`TableLayout`) plus the source and trigger.
+    ``merge_mode="mor"`` appends O(batch) deltas per micro-batch
+    (high-frequency tails); the ``mor_max_deltas`` governor keeps read
+    amplification bounded on long streams."""
+
     max_files_per_trigger: int = 8
     processing_time: str = "0 seconds"  # as-fast-as-possible micro-batches
-    # "mor" appends O(batch) deltas per micro-batch (high-frequency tails);
-    # the governor below keeps read amplification bounded on long streams.
-    merge_mode: str = "cow"
-    # MOR governor cadence: after each micro-batch, fold any bucket whose
-    # delta chain exceeds this (manifest-only check when nothing is over —
-    # no Spark job). None disables. Without it a long-running MOR stream
-    # grows delta chains without bound. Ignored for COW.
-    mor_max_deltas: int | None = 16
     # S9 source selection for stream_tail_topic: "file" tails a FileTopic
     # directory (the in-sandbox bus); "kafka" builds the real
     # readStream.format("kafka") reader (needs the spark-sql-kafka package
@@ -56,11 +57,6 @@ class StreamConfig:
     topic: str | None = None
     starting_offsets: str = "earliest"
     max_offsets_per_trigger: int | None = None  # Kafka's backpressure knob
-    # physical layout for the table the stream creates (see ReplayConfig):
-    # cluster_by sorts bucket files (row-group pruning on lsn scans),
-    # bloom_filter_cols writes key bloom filters (point-probe skipping)
-    cluster_by: tuple[str, ...] | None = None
-    bloom_filter_cols: tuple[str, ...] | None = None
 
 
 def kafka_source_options(
@@ -102,6 +98,34 @@ def decode_kafka_batch(batch: DataFrame, payload_schema) -> DataFrame:
     return deserialize_changelog(msgs, payload_schema)
 
 
+def _start(
+    spark: SparkSession,
+    stream: DataFrame,
+    decode: Callable[[DataFrame], DataFrame],
+    table_root: str,
+    state_root: str,
+    checkpoint_dir: str,
+    execution_id: str,
+    config: StreamConfig,
+) -> StreamingQuery:
+    """The one ``writeStream`` start path: each micro-batch is decoded,
+    then applied by the shared epoch-apply step (merge → commit marker keyed
+    by ``batch_id`` → MOR governor). The table is ordered even in COW mode,
+    so late or reordered micro-batches converge."""
+    table = _open_table(spark, table_root, _PAYLOAD, config, ordered=True)
+    commit_log = CommitLog(state_root, execution_id)
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        _apply_epoch(table, commit_log, config, _MICRO_BATCH, batch_id, decode(batch))
+
+    return (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(processingTime=config.processing_time)
+        .start()
+    )
+
+
 def stream_tail(
     spark: SparkSession,
     log_dir: str,
@@ -113,76 +137,15 @@ def stream_tail(
 ) -> StreamingQuery:
     """Start the continuous tail; returns the StreamingQuery handle."""
     config = config or StreamConfig()
-    commit_log = CommitLog(state_root, execution_id)
-
-    table = ParquetMergeTable(spark, table_root, config.key_cols)
-    if not table.exists():
-        import pyspark.sql.types as T
-
-        payload = T.StructType(
-            [f for f in BINLOG_SCHEMA.fields if f.name not in META_COLS]
-        )
-        ParquetMergeTable.create(
-            spark,
-            table_root,
-            payload,
-            config.key_cols,
-            config.num_buckets,
-            order_cols=("lsn", "seqval"),
-            merge_mode=config.merge_mode,
-            cluster_by=config.cluster_by,
-            bloom_filter_cols=config.bloom_filter_cols,
-        )
-
     stream = (
         spark.readStream.schema(BINLOG_SCHEMA)
         .option("maxFilesPerTrigger", config.max_files_per_trigger)
         .parquet(log_dir)
     )
-
-    return (
-        stream.writeStream.foreachBatch(
-            _merge_batch_fn(
-                table, commit_log, execution_id,
-                config.mor_max_deltas if config.merge_mode == "mor" else None,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=config.processing_time)
-        .start()
+    return _start(
+        spark, stream, lambda batch: batch, table_root, state_root,
+        checkpoint_dir, execution_id, config,
     )
-
-
-def _merge_batch_fn(table, commit_log, execution_id, mor_max_deltas=None):
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        # merge() compacts internally — one aggregation does micro-batch
-        # compaction and newer-wins dedup together. The commit marker's
-        # bounds (min/max lsn, raw count) ride the merge job's own
-        # Observation (MergeResult.batch_min/max_lsn + raw_events) — no
-        # second aggregation pass over the micro-batch (VERDICT r2 #2).
-        result = table.merge(batch, epoch_id=batch_id, collect_metrics=True)
-        commit_log.commit(
-            EpochCommit(
-                execution_id=execution_id,
-                table_name=commit_log.table_name,
-                epoch=batch_id,
-                from_lsn=result.batch_min_lsn,
-                to_lsn=result.batch_max_lsn,
-                applied_upserts=result.upserts,
-                applied_deletes=result.deletes,
-                skipped_events=max(
-                    0, max(0, result.raw_events) - result.upserts - result.deletes
-                ),
-                table_version=result.version,
-                partition_lineage={str(k): v for k, v in result.partition_lineage.items()},
-            )
-        )
-        # MOR read-amplification governor (same cadence as the batch
-        # pipeline): manifest-only check when no chain is over threshold
-        if mor_max_deltas is not None and hasattr(table, "compact_table"):
-            table.compact_table(max_deltas=mor_max_deltas)
-
-    return apply_batch
 
 
 def stream_tail_topic(
@@ -206,28 +169,10 @@ def stream_tail_topic(
     ``config.bootstrap_servers``/``config.topic`` (requires the
     spark-sql-kafka package on the cluster). Decode and merge plans are
     identical — only the source node differs."""
-    import pyspark.sql.types as T
-
     from cdc_tools_spark.bus.file_topic import TOPIC_SCHEMA
     from cdc_tools_spark.bus.json_codec import deserialize_changelog
 
     config = config or StreamConfig()
-    commit_log = CommitLog(state_root, execution_id)
-    payload = T.StructType([f for f in BINLOG_SCHEMA.fields if f.name not in META_COLS])
-
-    table = ParquetMergeTable(spark, table_root, config.key_cols)
-    if not table.exists():
-        ParquetMergeTable.create(
-            spark, table_root, payload, config.key_cols, config.num_buckets,
-            order_cols=("lsn", "seqval"), merge_mode=config.merge_mode,
-            cluster_by=config.cluster_by,
-            bloom_filter_cols=config.bloom_filter_cols,
-        )
-
-    merge = _merge_batch_fn(
-        table, commit_log, execution_id,
-        config.mor_max_deltas if config.merge_mode == "mor" else None,
-    )
     if config.source == "kafka":
         if not (config.bootstrap_servers and config.topic):
             raise ValueError(
@@ -245,26 +190,17 @@ def stream_tail_topic(
             )
             .load()
         )
-
-        def apply_batch(batch: DataFrame, batch_id: int) -> None:
-            merge(decode_kafka_batch(batch, payload), batch_id)
-
+        decode = decode_kafka_batch
     elif config.source == "file":
         stream = (
             spark.readStream.schema(TOPIC_SCHEMA)
             .option("maxFilesPerTrigger", config.max_files_per_trigger)
             .parquet(topic_root)
         )
-
-        def apply_batch(batch: DataFrame, batch_id: int) -> None:
-            merge(deserialize_changelog(batch, payload), batch_id)
-
+        decode = deserialize_changelog
     else:
         raise ValueError(f"unknown stream source: {config.source!r}")
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=config.processing_time)
-        .start()
+    return _start(
+        spark, stream, lambda batch: decode(batch, _PAYLOAD), table_root,
+        state_root, checkpoint_dir, execution_id, config,
     )

@@ -12,6 +12,27 @@ def spark() -> SparkSession:
     yield s
 
 
+@pytest.fixture
+def apply_order(monkeypatch) -> list[str]:
+    """Names of the apply step's calls in the order they ran: every
+    ``ParquetMergeTable.merge``, ``CommitLog.commit`` and
+    ``ParquetMergeTable.compact_table``."""
+    from cdc_tools_spark.lake.parquet_merge import ParquetMergeTable
+    from cdc_tools_spark.state.commit_log import CommitLog
+
+    calls: list[str] = []
+    for cls, name in ((ParquetMergeTable, "merge"), (CommitLog, "commit"),
+                      (ParquetMergeTable, "compact_table")):
+        real = getattr(cls, name)
+
+        def spy(self, *a, _real=real, _name=name, **kw):
+            calls.append(_name)
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+    return calls
+
+
 # ---------------------------------------------------------------------------
 # Independent oracle: replay a change-event list in plain Python/pandas.
 # Used to assert engine output without trusting any engine code.

@@ -300,6 +300,30 @@ def test_cow_metrics_add_no_spark_jobs(spark, tmp_path):
     assert jobs_on == jobs_off
 
 
+def _round_trips(monkeypatch, fn):
+    """(result of ``fn()``, py4j round trips it made from this thread).
+    Object releases do not count: py4j's finalizer thread sends them
+    whenever it drains its queue, also releases queued before ``fn``."""
+    import threading
+
+    import py4j.clientserver
+
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting_send(self, command):
+        if threading.get_ident() == caller:
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting_send)
+    try:
+        return fn(), len(sent)
+    finally:
+        monkeypatch.undo()
+
+
 # py4j round trips a warm merge may spend building its plan, up to the
 # write action. Capture on and no cached expressions: ~1,300-1,600; the
 # cached build with capture off measures ~100-170.
@@ -312,9 +336,6 @@ def test_warm_merge_plan_builds_from_cached_expressions(spark, tmp_path, monkeyp
     so it does not depend on host speed): a new table over an already
     merged schema builds from the cached expressions, and its second merge
     plan, built up to the write action, stays within the budget."""
-    import gc
-
-    import py4j.clientserver
     from pyspark.sql.readwriter import DataFrameWriter
 
     from cdc_tools_spark.lake import parquet_merge
@@ -341,24 +362,35 @@ def test_warm_merge_plan_builds_from_cached_expressions(spark, tmp_path, monkeyp
     def stop_at_write(self, *args, **kwargs):
         raise WriteReached
 
-    sent = []
-    send = py4j.clientserver.ClientServerConnection.send_command
-
-    def counting_send(self, command):
-        sent.append(command)
-        return send(self, command)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", stop_at_write)
-    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting_send)
-    gc.collect()
-    gc.disable()  # object releases otherwise land at the collector's whim
-    try:
+    def plan_second_merge():
         with pytest.raises(WriteReached):
             table.merge(batches[1], 1)
-    finally:
-        gc.enable()
-        monkeypatch.undo()
-    assert len(sent) <= MERGE_PLAN_ROUND_TRIPS, len(sent)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", stop_at_write)
+    _, sent = _round_trips(monkeypatch, plan_second_merge)
+    assert sent <= MERGE_PLAN_ROUND_TRIPS, sent
+
+
+def test_read_dirs_round_trips_do_not_grow_with_bucket_count(spark, tmp_path, monkeypatch):
+    """Handing the JVM a table's bucket directories costs the same number
+    of py4j round trips at 16 and at 256 buckets (``parquet(*dirs)`` makes
+    one per directory), and reads the same rows."""
+    import json
+
+    trips = {}
+    for n in (16, 256):
+        t = ParquetMergeTable.create(spark, str(tmp_path / f"t{n}"), PAYLOAD, num_buckets=n)
+        rows = [_row(1, 2, "r", f"p{i}", f"v{i}") for i in range(16 * n)]
+        t.merge(_file_batch(spark, tmp_path, rows, f"in{n}"), 0)
+        m = t._load()
+        dirs = t._leaf_dirs(m)
+        assert len(dirs) == n
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        df, trips[n] = _round_trips(monkeypatch, lambda: t._read_dirs(dirs, schema))
+        want = spark.read.schema(schema).parquet(*dirs)
+        assert sorted(df.collect()) == sorted(want.collect())
+        assert df.count() == len(rows)
+    assert trips[16] == trips[256] <= 32, trips
 
 
 def test_cluster_by_sorts_files_and_preserves_semantics(spark, tmp_path):

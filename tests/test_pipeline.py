@@ -430,3 +430,109 @@ def test_atomic_group_replay_all_or_nothing_visibility(spark, tmp_path, monkeypa
         got = {(r["repo"], r["path"]): r for r in view_end[t].collect()}
         assert set(got) == set(oracle)
         assert _sha_set(got) == _sha_set(oracle)
+
+
+def _ordered_log(spark, n_events, n_tables=1):
+    """A synthetic log (4-event transactions), its transactions dealt
+    round-robin over ``n_tables`` tables, so every epoch holds events of
+    every table."""
+    log = synthetic_binlog(spark, n_events, n_keys=200, seed=11, num_partitions=2)
+    if n_tables > 1:
+        log = log.withColumn(
+            "table_name", F.concat(F.lit("t"), F.pmod("lsn", F.lit(n_tables)).cast("string"))
+        )
+    return log
+
+
+def test_atomic_mor_replay_runs_the_governor_and_counts_commits(spark, tmp_path):
+    """replay_tables_atomic goes through the same apply step as replay: a
+    MOR run over 20 epochs keeps every bucket's delta chain within
+    mor_max_deltas, and each table's summary has one commit record per
+    applied epoch, with redundant_events the sum of their skipped_events."""
+    from cdc_tools_spark.lake.parquet_merge import _versions_of
+    from cdc_tools_spark.pipeline import replay_tables_atomic
+
+    log = _ordered_log(spark, 2_000, n_tables=2)
+    cfg = ReplayConfig(epoch_events=100, num_buckets=4, epoch_strategy="exact",
+                       merge_mode="mor", mor_max_deltas=2)
+    tables, state = str(tmp_path / "tables"), str(tmp_path / "s")
+    out = replay_tables_atomic(spark, log, tables, state, config=cfg)
+    assert set(out) == {"t0", "t1"}
+    for t, summary in out.items():
+        assert summary.epochs_applied == 20
+        assert len(summary.commits) == summary.epochs_applied
+        assert [r.epoch for r in summary.commits] == list(range(20))
+        assert summary.redundant_events == sum(r.skipped_events for r in summary.commits)
+        assert summary.redundant_events > 0
+        table = ParquetMergeTable(spark, str(tmp_path / "tables" / t))
+        chains = [len(_versions_of(v)) for v in table._load()["buckets"].values()]
+        assert max(chains) <= cfg.mor_max_deltas
+        want = compact_last_write_wins(
+            log.where(F.col("table_name") == t).drop("table_name")
+        ).where(F.col("change_type") != 1)
+        cols = ["repo", "path", "content"]
+        assert table.read().select(cols).exceptAll(want.select(cols)).count() == 0
+        assert want.select(cols).exceptAll(table.read().select(cols)).count() == 0
+
+
+def test_atomic_resume_keeps_a_rolled_epoch_marker(spark, tmp_path, monkeypatch):
+    """A crash between two tables' merges of epoch 1, just after table t0's
+    epoch-1 marker was rolled into a chunk: the resume replans epoch 1 with
+    wider bounds, re-merges t0's slice, and must not write t0 a second,
+    different epoch-1 marker. t0's resumed summary counts that epoch as
+    skipped, so its commits match the durable markers."""
+    import functools
+    import json
+    import os
+    from dataclasses import asdict, replace
+
+    import pytest
+
+    from cdc_tools_spark import pipeline as pl
+    from cdc_tools_spark.pipeline import replay_tables_atomic
+
+    monkeypatch.setattr(pl, "CommitLog", functools.partial(CommitLog, roll_every=2))
+    log = _ordered_log(spark, 400, n_tables=2)
+    cfg = ReplayConfig(epoch_events=100, num_buckets=4, epoch_strategy="exact")
+    tables, state = str(tmp_path / "tables"), str(tmp_path / "s")
+    real_merge = pl.ParquetMergeTable.merge
+
+    def dying_merge(self, batch, epoch_id, *a, **kw):
+        if epoch_id >= 1 and self.root.endswith("t1"):
+            raise OSError("simulated crash before t1's merge")
+        return real_merge(self, batch, epoch_id, *a, **kw)
+
+    monkeypatch.setattr(pl.ParquetMergeTable, "merge", dying_merge)
+    with pytest.raises(OSError, match="simulated crash"):
+        replay_tables_atomic(spark, log, tables, state, config=replace(cfg, max_retries=0))
+    monkeypatch.setattr(pl.ParquetMergeTable, "merge", real_merge)
+
+    t0_log = CommitLog(state, "run-0", "t0")
+    loose, chunks = t0_log._listing()
+    assert loose == [] and chunks == ["chunk-0000000000-0000000001.json"]
+    (rolled,) = [r for r in t0_log.records() if r.epoch == 1]
+
+    out = replay_tables_atomic(spark, log, tables, state, config=cfg)
+    assert 1 not in [r.epoch for r in out["t0"].commits]
+    assert out["t0"].epochs_skipped == 1
+    assert 1 in [r.epoch for r in out["t1"].commits]
+    # every stored copy of t0's epoch-1 marker, loose or chunked, is the
+    # one written before the crash
+    copies = []
+    for name in sorted(os.listdir(t0_log.dir)):
+        with open(os.path.join(t0_log.dir, name)) as f:
+            body = json.load(f)
+        copies += [r for r in body.get("records", [body]) if r["epoch"] == 1]
+    assert copies and all(r == asdict(rolled) for r in copies)
+
+
+def test_replay_commits_each_epoch_before_the_governor_folds(spark, tmp_path, apply_order):
+    """Apply order per epoch: merge, then the commit marker, then the MOR
+    governor. A reader that waits for the marker must never wait for a
+    fold."""
+    log = _ordered_log(spark, 600)
+    cfg = ReplayConfig(epoch_events=100, num_buckets=4, epoch_strategy="exact",
+                       merge_mode="mor", mor_max_deltas=1)
+    summary = replay(spark, log, str(tmp_path / "t"), str(tmp_path / "s"), config=cfg)
+    assert summary.epochs_applied == 6
+    assert apply_order == ["merge", "commit", "compact_table"] * 6

@@ -258,3 +258,30 @@ def test_stream_mor_governor_bounds_delta_chains(spark, tmp_path):
     assert max(chains.values()) <= cfg.mor_max_deltas + 1  # folded under governor
     got = {r["path"]: r["content"] for r in table.read().collect()}
     assert got == {"p0": "v9", "p1": "v10", "p2": "v11"}
+
+
+def test_stream_commits_each_batch_before_the_governor_folds(spark, tmp_path, apply_order):
+    """A MOR micro-batch runs merge, then its commit marker, then the
+    governor: the tail's freshness is measured from the marker, so the
+    marker must never wait for a fold."""
+    log_dir = str(tmp_path / "log")
+    for i in range(4):
+        spark.createDataFrame(
+            [{"lsn": i, "seqval": 0, "change_type": 2, "repo": "r",
+              "path": f"p{i % 2}", "commit": f"c{i}", "lang": "py",
+              "content": f"v{i}"}],
+            schema=EVENT_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(log_dir)
+    q = stream_tail(
+        spark, log_dir, str(tmp_path / "table"), str(tmp_path / "state"),
+        str(tmp_path / "ckpt"),
+        config=StreamConfig(num_buckets=4, max_files_per_trigger=1,
+                            merge_mode="mor", mor_max_deltas=1),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert apply_order == ["merge", "commit", "compact_table"] * 4
+    recs = CommitLog(str(tmp_path / "state"), "stream-0").records()
+    assert [(r.from_lsn, r.to_lsn) for r in recs] == [(i, i) for i in range(4)]
